@@ -8,20 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached plans keep AQE-coalesced partitioning: without this every
-      // persisted small intermediate materializes at the static shuffle
-      // partition count and each downstream stage pays one task per
-      // near-empty block (measured 2.5x on the pagerank iteration chain)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Main.cpus(32)
+    val spark = Main.localSession(cpus)
     graft.functions.GraftExtensions.register(spark)
     // Run metadata makes a contaminated artifact self-identifying: a round
     // measured while the machine was busy (snapshot machinery, concurrent
@@ -612,12 +600,7 @@ object Bench {
       }
       math.min(run(), run())
     } catch { case scala.util.control.NonFatal(_) => -1.0 }
-    finally {
-      try java.nio.file.Files.walk(dir)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    finally LocalFiles.deleteTree(dir)
   }
 
   /** A/B for the LevenshteinPrefilter optimizer rule: 200k candidate

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan/profiling utility: print the formatted physical plan of one
   * SparkEntry query and time N executions.
   *
@@ -12,20 +10,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached plans keep AQE-coalesced partitioning: without this every
-      // persisted small intermediate materializes at the static shuffle
-      // partition count and each downstream stage pays one task per
-      // near-empty block (measured 2.5x on the pagerank iteration chain)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.localSession(Main.cpus(8))
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).explain("formatted")
     (1 to runs).foreach { i =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * before/after plan evidence for optimization rounds (plans/rNN/).
   *
@@ -20,17 +18,7 @@ object ExplainDump {
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.localSession(Main.cpus(32), logLevel = "ERROR")
     graft.functions.GraftExtensions.register(spark)
     names.foreach { name =>
       val out = outDir.resolve(s"${name}_$suffix.txt")

@@ -38,13 +38,13 @@ object Main {
     a
   }
 
-  def session(): SparkSession =
+  /** The settings every local session shares: `shuffle.partitions` =
+    * `cpus`, AQE on or off, UTC, no UI. */
+  private def builder(master: String, cpus: String, aqe: Boolean): SparkSession.Builder =
     SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("graft-archiver")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.adaptive.enabled", "true")
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", aqe.toString)
       // cached plans keep AQE-coalesced partitioning: without this every
       // persisted small intermediate materializes at the static shuffle
       // partition count and each downstream stage pays one task per
@@ -52,7 +52,26 @@ object Main {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  /** Local parallelism: SPARK_GRAFT_CPUS, else `default`. */
+  private[graft] def cpus(default: Int): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString)
+
+  def session(): SparkSession = {
+    val n = cpus(4)
+    builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$n]"), n, aqe = true)
+      .appName("graft-archiver")
       .getOrCreate()
+  }
+
+  /** The `local[cpus]` session of the dev and bench mains. `aqe = false`
+    * keeps plans static for tools that read the compile-time plan. */
+  def localSession(cpus: String, aqe: Boolean = true,
+      logLevel: String = "WARN"): SparkSession = {
+    val s = builder(s"local[$cpus]", cpus, aqe).getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
 
   /** Session with the graft SQL functions + optimizer rules active. */
   def registeredSession(): SparkSession = {

@@ -61,17 +61,9 @@ object PlanAudit {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "PLANS.md"
     val baseDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static plans: AQE wrappers hide codegen stage markers (and final
-      // join choices) until execution; the audit reads the compile-time plan
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // static plans: AQE wrappers hide codegen stage markers (and final
+    // join choices) until execution; the audit reads the compile-time plan
+    val spark = Main.localSession(Main.cpus(8), aqe = false, logLevel = "ERROR")
     graft.functions.GraftExtensions.register(spark)
     // queries that EXECUTE during construction (streaming memory sinks):
     // their returned plan is a materialized-table scan, so plan columns

@@ -92,17 +92,8 @@ object ScaleProbe {
     val out = if (args.length > 2) args(2) else "SCALE_PROBE.md"
     val benchFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE",
       "bench_full.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Main.cpus(32)
+    val spark = Main.localSession(cpus)
     graft.functions.GraftExtensions.register(spark)
 
     val probeQueries = probeSet(benchFile, 15)

@@ -90,13 +90,7 @@ object SparkEntry {
     private val dirs =
       scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      dirs.synchronized { dirs.foreach { root =>
-        try {
-          java.nio.file.Files.walk(root)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Exception => () }
-      } }))
+      dirs.synchronized { dirs.foreach(LocalFiles.deleteTree) }))
     def create(prefix: String): String = {
       val p = java.nio.file.Files.createTempDirectory(prefix)
       dirs.synchronized { dirs += p }
@@ -156,11 +150,7 @@ object SparkEntry {
       }
       destDir.resolve(name + ".parquet").toFile.setLastModified(mtime)
     }
-    try {
-      java.nio.file.Files.walk(stage)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    } catch { case scala.util.control.NonFatal(_) => () }
+    LocalFiles.deleteTree(stage)
   }
 
   /** Memoized two-half stream fixture dirs (r12): the st7/st8/st13/st14/
@@ -1633,9 +1623,7 @@ object SparkEntry {
             java.nio.file.Files.copy(part.toPath, p.resolve(s"$n.parquet"))
             p.resolve(s"$n.parquet").toFile.setLastModified(mt)
         }
-        java.nio.file.Files.walk(stage)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
+        LocalFiles.deleteTree(stage)
       }
       val qn = "graft_st3_" + math.abs(dir.hashCode).toString
       withShufflePartitions(s, 8) {

@@ -8,6 +8,7 @@ import graft.catalog.Catalog
 import graft.config._
 import graft.sinks._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -39,30 +40,23 @@ object Archiver {
       deletedCount: Long,
       vetoed: Boolean)
 
+  private val LiveBackup = ".__old__"
+
   /** Parquet-testbed delete-back: rewrite the live table without the
-    * archived rows (write-aside + backup-rename swap — the live table is
-    * never deleted before its replacement is durable; a run that dies
-    * mid-swap is recovered by `recoverLiveStore` on the next run).
-    * Against JDBC this becomes the keyed DELETE of SURVEY.md D1. Shared
-    * by the CLI and the flagship `entry`. */
+    * archived rows through [[Commit.replace]] (staging `.__new__`, backup
+    * `.__old__`) — the live table is never deleted before its replacement
+    * is durable; a run that dies mid-swap is recovered by
+    * `recoverLiveStore` on the next run. Against JDBC this becomes the
+    * keyed DELETE of SURVEY.md D1. Shared by the CLI and the flagship
+    * `entry`. */
   def parquetLiveStore(spark: SparkSession, sourceDir: String): (
       graft.Tables.TableSpec, org.apache.spark.sql.DataFrame) => Unit =
     (spec, rest) => {
-      val path = s"$sourceDir/${spec.name}.parquet"
-      val target = new org.apache.hadoop.fs.Path(path)
-      val backup = new org.apache.hadoop.fs.Path(path + ".__old__")
-      val tmp = new org.apache.hadoop.fs.Path(path + ".__new__")
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // recover a previous run that died mid-swap
-      if (fs.exists(backup) && !fs.exists(target)) fs.rename(backup, target)
-      if (fs.exists(backup)) fs.delete(backup, true)
-      rest.write.mode("overwrite").parquet(tmp.toString)
-      fs.rename(target, backup)
-      if (!fs.rename(tmp, target)) {
-        fs.rename(backup, target)
-        throw new java.io.IOException(s"rename $tmp -> $target failed")
+      val target = new Path(s"$sourceDir/${spec.name}.parquet")
+      Commit.replace(target.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        target, Commit.sibling(target, ".__new__"), Commit.sibling(target, LiveBackup)) {
+        tmp => rest.write.mode("overwrite").parquet(tmp.toString)
       }
-      fs.delete(backup, true)
     }
 }
 
@@ -155,17 +149,16 @@ final class Archiver(
     } finally archived.unpersist()
   }
 
-  /** Restore any live table stranded at `<name>.__old__` by a crash during
-    * a previous delete-back swap — must run before discovery, or the lost
-    * table simply isn't seen. */
+  /** Finish any delete-back swap a crash interrupted ([[Commit.recover]]
+    * on every `<name>.__old__`) — must run before discovery, or a table
+    * stranded at its backup simply isn't seen. */
   private def recoverLiveStore(): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(conf.source.dir)
+    val dir = new Path(conf.source.dir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir)) fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".__old__")).foreach { st =>
-        val base = new org.apache.hadoop.fs.Path(dir,
-          st.getPath.getName.stripSuffix(".__old__"))
-        if (!fs.exists(base)) fs.rename(st.getPath, base)
+      .filter(_.getPath.getName.endsWith(Archiver.LiveBackup)).foreach { st =>
+        Commit.recover(fs,
+          new Path(dir, st.getPath.getName.stripSuffix(Archiver.LiveBackup)), st.getPath)
       }
   }
 

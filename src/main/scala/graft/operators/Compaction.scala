@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sinks.Commit
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,32 +10,27 @@ import org.apache.spark.sql.functions._
   * Long-running archival produces many small files (one batch = one or
   * more part files); at 100 TB that turns every downstream scan into a
   * listing/open-latency problem. Compaction rewrites the directory with
-  * partition count sized from the actual bytes on storage, using the same
-  * backup-rename swap as the upsert sink so a crash never loses the
-  * archive.
+  * partition count sized from the actual bytes on storage, through the
+  * same [[graft.sinks.Commit]] swap as the upsert sink so a crash never
+  * loses the archive.
   */
 object Compaction {
 
   /** Rewrite `path` so each output file targets `targetBytes` (default
-    * 128 MB — one HDFS/object-store block). Returns the new file count. */
+    * 128 MB — one HDFS/object-store block). Returns the new file count.
+    * An archive a crashed sink merge or compaction stranded at
+    * `<path>.__old__` is restored first. */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__compact__")
-    val backup = new org.apache.hadoop.fs.Path(s"$path.__old__")
-    df.repartition(parts).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    fs.rename(p, backup)
-    if (!fs.rename(tmp, p)) {
-      fs.rename(backup, p)
-      throw new java.io.IOException(s"compaction rename failed for $path")
+    Commit.replace(fs, p, Commit.sibling(p, ".__compact__"),
+      Commit.sibling(p, ".__old__")) { tmp =>
+      val bytes = fs.getContentSummary(p).getLength
+      val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+      spark.read.parquet(path).repartition(parts).write.mode("overwrite").parquet(tmp.toString)
+      parts
     }
-    fs.delete(backup, true)
-    parts
   }
 
   /** Cluster-and-write: range-partition on `clusterCols`, sort within each

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sinks.Commit
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +17,7 @@ import org.apache.spark.sql.functions._
   * group pruning doing the skipping.
   *
   * Storage is a tiny single-partition parquet KV (table_name, col_name,
-  * wm_value as string) rewritten atomically via the same temp+rename swap
+  * wm_value as string) rewritten atomically via the same [[Commit]] swap
   * the sinks use. Values round-trip as strings with the column's type
   * recorded, so timestamps/longs/decimals all work; `advance` is
   * monotone (max of old and new) making re-runs and replays safe.
@@ -36,15 +38,9 @@ final class Watermarks(spark: SparkSession, path: String) {
   private def bakPath = new org.apache.hadoop.fs.Path(path + ".bak")
   private def tmpPath = new org.apache.hadoop.fs.Path(path + ".tmp")
 
-  /** Crash recovery (the parquetLiveStore pattern): a previous run that
-    * died between renaming the store to .bak and renaming .tmp into place
-    * leaves only the backup — restore it so the watermark is never lost. */
-  private def recover(): Unit = {
-    val fs = fsFor(target)
-    if (fs.exists(bakPath) && !fs.exists(target)) fs.rename(bakPath, target)
-    if (fs.exists(bakPath)) fs.delete(bakPath, true)
-    ()
-  }
+  /** A previous run that died mid-swap may have left the store only at
+    * `.bak` — restore it so the watermark is never lost. */
+  private def recover(): Unit = Commit.recover(fsFor(target), target, bakPath)
 
   def load(): DataFrame = {
     recover()
@@ -108,22 +104,11 @@ final class Watermarks(spark: SparkSession, path: String) {
         org.apache.spark.sql.Row(t, c, v, typ)),
       org.apache.spark.sql.types.StructType.fromDDL(schema))
 
-  /** Crash-safe swap: write to a temp dir, rename over the old store
-    * (the ParquetUpsertSink pattern), via the Hadoop FS API so remote
-    * URIs work. A crash at any point is recovered by `recover()` on the
-    * next load/advance: the store is either at `path` or at `path.bak`,
-    * never gone. */
-  private def writeSwap(df: DataFrame): Unit = {
-    val fs = fsFor(target)
-    df.coalesce(1).write.mode("overwrite").parquet(tmpPath.toString)
-    if (fs.exists(bakPath)) fs.delete(bakPath, true)
-    if (fs.exists(target) && !fs.rename(target, bakPath))
-      throw new java.io.IOException(s"cannot back up watermark store $path")
-    if (!fs.rename(tmpPath, target)) {
-      fs.rename(bakPath, target) // restore
-      throw new java.io.IOException(s"cannot swap watermark store $path")
+  /** Crash-safe swap through [[Commit.replace]] (staging `.tmp`, backup
+    * `.bak`): the store is either at `path` or at `path.bak`, never gone,
+    * and `recover()` on the next load/advance puts it back. */
+  private def writeSwap(df: DataFrame): Unit =
+    Commit.replace(fsFor(target), target, tmpPath, bakPath) { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     }
-    fs.delete(bakPath, true)
-    ()
-  }
 }

@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.Tables.TableSpec
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -112,6 +112,14 @@ object Manifest {
   }
 
   val ManifestName = "_graft_manifest.json"
+
+  /** Run `write` on `df` and return the rows it wrote, counted on the write
+    * job itself (`Dataset.observe`) — no separate count job, no read-back. */
+  def countingWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
 }
 
 /** W2/W3/W4 — idempotent keyed archive store on parquet.
@@ -137,19 +145,14 @@ final class ParquetUpsertSink(root: String, evolveSchema: Boolean = false)
     val path = s"$root/$db/${spec.name}"
     val spark = df.sparkSession
     val target = new org.apache.hadoop.fs.Path(path)
-    val backup = new org.apache.hadoop.fs.Path(s"$path.__old__")
+    val backup = Commit.sibling(target, ".__old__")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (dryRun) { df.count(); return } // X4: execute the read, skip the write
-    // crash recovery: a previous run that died mid-swap left the archive at
-    // the backup location — restore it before doing anything else
-    if (fs.exists(backup) && !fs.exists(target)) fs.rename(backup, target)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (!fs.exists(target)) {
-      df.write.mode(SaveMode.ErrorIfExists).parquet(path)
-      // store-level manifest: df is persisted by the archiver before the
-      // fan-out, so the count is a cache scan. (A 100 TB deployment would
-      // maintain the count incrementally instead of recounting the store.)
-      Manifest.write(spark, path, spec.name, df.count())
+    // a previous run that died mid-swap may have left the archive at the
+    // backup location — restore it before deciding create vs merge
+    Commit.recover(fs, target, backup)
+    val rows = if (!fs.exists(target)) {
+      Manifest.countingWrite(df)(_.write.mode(SaveMode.ErrorIfExists).parquet(path))
     } else {
       val existing = spark.read.parquet(path)
       if (evolveSchema) SchemaGuard.checkEvolvable(existing.schema, df.schema, path)
@@ -162,20 +165,14 @@ final class ParquetUpsertSink(root: String, evolveSchema: Boolean = false)
       // column; with evolution off the schemas are structurally equal and
       // allowMissingColumns is a no-op
       val merged = existing.unionByName(newRows, allowMissingColumns = evolveSchema)
-      val tmp = new org.apache.hadoop.fs.Path(s"$path.__staging__")
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      // backup-rename swap: the previous archive is never deleted before
-      // the new one is in place (archived rows may already be delete-backed
-      // from the source — losing them here would be silent data loss)
-      fs.rename(target, backup)
-      if (!fs.rename(tmp, target)) {
-        fs.rename(backup, target) // roll back; staging left for inspection
-        throw new java.io.IOException(s"rename $tmp -> $target failed")
+      // the previous archive is never deleted before the new one is in
+      // place (archived rows may already be delete-backed from the source
+      // — losing them here would be silent data loss)
+      Commit.replace(fs, target, Commit.sibling(target, ".__staging__"), backup) { tmp =>
+        Manifest.countingWrite(merged)(_.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
       }
-      fs.delete(backup, true)
-      Manifest.write(spark, path, spec.name,
-        spark.read.parquet(path).count())
     }
+    Manifest.write(spark, path, spec.name, rows)
   }
 
   def read(spark: SparkSession, db: String, table: String): DataFrame =
@@ -190,9 +187,11 @@ final class CsvSink(root: String, compression: Option[String] = None) extends Si
   override def write(db: String, spec: TableSpec, df: DataFrame, dryRun: Boolean): Unit = {
     if (dryRun) { df.count(); return }
     val path = s"$root/$db.${spec.name}.csv"
-    val w = df.write.mode(SaveMode.Overwrite).option("header", "true")
-    compression.fold(w)(c => w.option("compression", c)).csv(path)
-    Manifest.write(df.sparkSession, path, spec.name, df.count())
+    val rows = Manifest.countingWrite(df) { counted =>
+      val w = counted.write.mode(SaveMode.Overwrite).option("header", "true")
+      compression.fold(w)(c => w.option("compression", c)).csv(path)
+    }
+    Manifest.write(df.sparkSession, path, spec.name, rows)
   }
 }
 

@@ -43,13 +43,24 @@ object VersionedPublish {
       .flatMap(st => versionOf(st.getPath).map(_ -> st.getPath))
       .sortBy(_._1)
 
-  private def isComplete(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(new Path(dir, "_SUCCESS"))
+  /** The id the next publish under `base` takes: one past every listed
+    * version, complete or torso, so a torso's id is never reused. */
+  private def nextVersion(fs: FileSystem, base: Path): Long = {
+    fs.mkdirs(base)
+    listVersions(fs, base).map(_._1).foldLeft(0L)(math.max) + 1
+  }
+
+  /** Marks a complete single-table version (Spark's own job marker). */
+  private val VersionMarker = "_SUCCESS"
+
+  private def isComplete(fs: FileSystem, dir: Path, marker: String): Boolean =
+    fs.exists(new Path(dir, marker))
 
   /** The committed version readers should see: the `_LATEST` pointer when
-    * it names a complete version, else the highest complete version (the
-    * crash-between-delete-and-rename fallback), else None. */
-  def resolve(spark: SparkSession, baseUri: String): Option[(Long, String)] = {
+    * it names a version holding `marker`, else the highest such version
+    * (the crash-between-delete-and-rename fallback), else None. */
+  private def resolveWith(spark: SparkSession, baseUri: String,
+      marker: String): Option[(Long, String)] = {
     val base = new Path(baseUri)
     val fs = fsFor(spark, base)
     val ptr = new Path(base, "_LATEST")
@@ -61,12 +72,37 @@ object VersionedPublish {
           finally in.close()
         scala.util.Try(s.toLong).toOption
           .map(v => v -> new Path(base, s"v=$v"))
-          .filter { case (_, d) => fs.exists(d) && isComplete(fs, d) }
+          .filter { case (_, d) => fs.exists(d) && isComplete(fs, d, marker) }
       }
     pointed.orElse(
-        listVersions(fs, base).filter(v => isComplete(fs, v._2)).lastOption)
+        listVersions(fs, base).filter(v => isComplete(fs, v._2, marker)).lastOption)
       .map { case (v, d) => (v, d.toString) }
   }
+
+  /** Commit version `next` by swapping the `_LATEST` pointer, then apply
+    * retention: the newest `keep` versions holding `marker` survive (and
+    * `next` always does); older ones and stale torsos are deleted. */
+  private def commitPointer(fs: FileSystem, base: Path, next: Long,
+      keep: Int, marker: String): Unit = {
+    // commit point: temp + delete + rename (rename-over-existing is not
+    // portable across Hadoop filesystems)
+    val tmp = new Path(base, "_LATEST.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
+    val ptr = new Path(base, "_LATEST")
+    if (fs.exists(ptr)) fs.delete(ptr, false)
+    if (!fs.rename(tmp, ptr))
+      throw new java.io.IOException(s"cannot commit _LATEST for $base")
+    val complete = listVersions(fs, base).filter(v => isComplete(fs, v._2, marker))
+    val keepSet = complete.takeRight(keep).map(_._1).toSet + next
+    listVersions(fs, base).foreach { case (v, d) =>
+      if (!keepSet.contains(v) && v < next) fs.delete(d, true)
+    }
+  }
+
+  /** The committed single-table version readers should see, or None. */
+  def resolve(spark: SparkSession, baseUri: String): Option[(Long, String)] =
+    resolveWith(spark, baseUri, VersionMarker)
 
   /** Publish `df` as the next version; returns the committed version id.
     * Keeps the newest `keep` complete versions (the resolved one always
@@ -78,25 +114,10 @@ object VersionedPublish {
     val spark = df.sparkSession
     val base = new Path(baseUri)
     val fs = fsFor(spark, base)
-    fs.mkdirs(base)
-    val next = listVersions(fs, base).map(_._1).foldLeft(0L)(math.max) + 1
+    val next = nextVersion(fs, base)
     val vdir = new Path(base, s"v=$next")
     df.write.mode("overwrite").parquet(vdir.toString)
-    // commit point: temp + delete + rename (rename-over-existing is not
-    // portable across Hadoop filesystems)
-    val tmp = new Path(base, "_LATEST.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(base, "_LATEST")
-    if (fs.exists(ptr)) fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(s"cannot commit _LATEST for $baseUri")
-    // retention: newest `keep` complete versions survive; stale torsos go
-    val complete = listVersions(fs, base).filter(v => isComplete(fs, v._2))
-    val keepSet = complete.takeRight(keep).map(_._1).toSet + next
-    listVersions(fs, base).foreach { case (v, d) =>
-      if (!keepSet.contains(v) && v < next) fs.delete(d, true)
-    }
+    commitPointer(fs, base, next, keep, VersionMarker)
     next
   }
 
@@ -112,7 +133,7 @@ object VersionedPublish {
     val base = new Path(baseUri)
     val fs = fsFor(spark, base)
     val vdir = new Path(base, s"v=$version")
-    if (!fs.exists(vdir) || !isComplete(fs, vdir))
+    if (!fs.exists(vdir) || !isComplete(fs, vdir, VersionMarker))
       throw new java.util.NoSuchElementException(
         s"version $version is not a complete committed version under " +
           s"$baseUri (pruned by retention, never published, or torso)")
@@ -131,9 +152,6 @@ object VersionedPublish {
   // ---- multi-table atomic snapshots -------------------------------------
 
   private val SnapshotMarker = "_SNAPSHOT_COMPLETE"
-
-  private def isSnapshotComplete(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(new Path(dir, SnapshotMarker))
 
   /** Publish N tables as ONE atomic snapshot version — the cross-table
     * consistency primitive a relational export needs: a reader must never
@@ -157,69 +175,46 @@ object VersionedPublish {
     val spark = tables.head._2.sparkSession
     val base = new Path(baseUri)
     val fs = fsFor(spark, base)
-    fs.mkdirs(base)
-    val next = listVersions(fs, base).map(_._1).foldLeft(0L)(math.max) + 1
+    val next = nextVersion(fs, base)
     val vdir = new Path(base, s"v=$next")
     // the per-table writes are INDEPENDENT jobs into disjoint subdirs —
     // submit them concurrently so the next table's tasks back-fill
     // executors freed by the current table's write tail (r12; the
-    // overlap-independent-jobs discipline). Atomicity is untouched: the
-    // snapshot marker still lands only after EVERY write returned, and
-    // any write failure propagates before the marker exists.
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tables.map { case (name, df) =>
-      new Thread(() => {
-        try {
+    // overlap-independent-jobs discipline), on no more threads than
+    // Spark has task slots (`defaultParallelism`). Atomicity is untouched: the snapshot marker still lands
+    // only after EVERY write returned, and any write failure propagates
+    // before the marker exists.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(tables.size, spark.sparkContext.defaultParallelism))
+    val failures = try {
+      tables.map { case (name, df) =>
+        val write: java.util.concurrent.Callable[Unit] = () => {
           // job descriptions are thread-local: label each write
           df.sparkSession.sparkContext
             .setJobDescription(s"publishSnapshot v=$next/$name")
           df.write.mode("overwrite").parquet(new Path(vdir, name).toString)
-        } catch { case t: Throwable => failures.add(t) }
+        }
+        pool.submit(write)
+      }.flatMap(f => scala.util.Try(f.get()).failed.toOption.map {
+        case e: java.util.concurrent.ExecutionException => e.getCause
+        case e => e
       })
+    } finally pool.shutdown()
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    if (!failures.isEmpty) throw failures.peek()
     // snapshot commit point: marker AFTER every table landed
     fs.create(new Path(vdir, SnapshotMarker), true).close()
-    val tmp = new Path(base, "_LATEST.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(base, "_LATEST")
-    if (fs.exists(ptr)) fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(s"cannot commit _LATEST for $baseUri")
-    val complete = listVersions(fs, base)
-      .filter(v => isSnapshotComplete(fs, v._2))
-    val keepSet = complete.takeRight(keep).map(_._1).toSet + next
-    listVersions(fs, base).foreach { case (v, d) =>
-      if (!keepSet.contains(v) && v < next) fs.delete(d, true)
-    }
+    commitPointer(fs, base, next, keep, SnapshotMarker)
     next
   }
 
-  /** The committed snapshot readers should see — `_LATEST` when it names
-    * a complete snapshot, else the highest complete one (crash fallback),
-    * else None. Mirrors [[resolve]] with the snapshot-level marker. */
+  /** The committed snapshot readers should see — [[resolve]] with the
+    * snapshot-level marker. */
   def resolveSnapshot(spark: SparkSession,
-      baseUri: String): Option[(Long, String)] = {
-    val base = new Path(baseUri)
-    val fs = fsFor(spark, base)
-    val ptr = new Path(base, "_LATEST")
-    val pointed: Option[(Long, Path)] =
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
-        val s = try scala.io.Source.fromInputStream(in).mkString.trim
-          finally in.close()
-        scala.util.Try(s.toLong).toOption
-          .map(v => v -> new Path(base, s"v=$v"))
-          .filter { case (_, d) =>
-            fs.exists(d) && isSnapshotComplete(fs, d) }
-      }
-    pointed.orElse(listVersions(fs, base)
-        .filter(v => isSnapshotComplete(fs, v._2)).lastOption)
-      .map { case (v, d) => (v, d.toString) }
-  }
+      baseUri: String): Option[(Long, String)] =
+    resolveWith(spark, baseUri, SnapshotMarker)
 
   /** Read one table of the committed snapshot — every table read through
     * the same resolved version is mutually consistent by construction. */

@@ -167,4 +167,38 @@ class ArchiverSpec extends AnyFunSuite {
     assert(r.archivedCount > 0 && r.deletedCount === 0)
     assert(!new java.io.File(s"$out/parquet/src/orders").exists())
   }
+
+  private def ordersOnly(src: String, out: String) =
+    conf(src, Seq(ParquetDestination("x", s"$out/parquet")), delete = true)
+      .copy(source = SourceConfig("src", src, tables = "orders", retention = "12 MONTH"))
+
+  test("a live table stranded at its delete-back backup is restored, then archived") {
+    val src = TestSpark.writableCopy()
+    val live = new java.io.File(s"$src/orders.parquet")
+    val backup = new java.io.File(s"$src/orders.parquet.__old__")
+    val rows = Tables.load(spark, src, "orders").count()
+    // a crash between the two swap renames left the table only at its backup
+    assert(live.renameTo(backup))
+    val results = new Archiver(spark, ordersOnly(src, TestSpark.tmpDir("arch-strand")), now)
+      .run(Some(Archiver.parquetLiveStore(spark, src)))
+    val r = results.find(_.table == "orders").getOrElse(fail("orders not elected"))
+    assert(!r.vetoed && r.archivedCount > 0 && r.deletedCount === r.archivedCount)
+    assert(!backup.exists())
+    assert(Tables.load(spark, src, "orders").count() === rows - r.archivedCount)
+  }
+
+  test("a stale delete-back backup beside a live table is deleted, not restored") {
+    val src = TestSpark.writableCopy()
+    val backup = new java.io.File(s"$src/orders.parquet.__old__")
+    val rows = Tables.load(spark, src, "orders").count()
+    // a crash after the swap, before the backup was deleted: the backup
+    // holds rows the live table no longer has
+    spark.range(3).toDF("stale").write.parquet(backup.toString)
+    val r = new Archiver(spark, ordersOnly(src, TestSpark.tmpDir("arch-stale")), now)
+      .run(Some(Archiver.parquetLiveStore(spark, src)))
+      .find(_.table == "orders").getOrElse(fail("orders not elected"))
+    assert(!backup.exists())
+    assert(Tables.load(spark, src, "orders").count() === rows - r.archivedCount)
+    assert(Tables.load(spark, src, "orders").columns.contains("o_orderkey"))
+  }
 }

@@ -166,4 +166,18 @@ class CompactionSpec extends AnyFunSuite {
     assert(fromGroups.exceptAll(plan).count() === 0)
     assert(plan.exceptAll(fromGroups).count() === 0)
   }
+
+  test("compaction restores an archive a crashed swap stranded at its backup") {
+    import spark.implicits._
+    val out = TestSpark.tmpDir("compact-strand") + "/t"
+    val rows = (1L to 50L).map(i => (i, s"r$i")).toDF("id", "v")
+    rows.repartition(5).write.parquet(out)
+    // a sink merge or compaction died between its two renames
+    assert(new java.io.File(out).renameTo(new java.io.File(out + ".__old__")))
+    assert(Compaction.compact(spark, out) === 1)
+    assert(!new java.io.File(out + ".__old__").exists())
+    val back = spark.read.parquet(out)
+    assert(back.count() === 50)
+    assert(back.exceptAll(rows).count() === 0)
+  }
 }

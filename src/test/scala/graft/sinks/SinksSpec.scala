@@ -163,6 +163,17 @@ class SinksSpec extends AnyFunSuite {
     assert(manifest().contains("\"rows\":500"))
     // the manifest never pollutes reads (underscore-prefixed)
     assert(sink.read(spark, "db", "t").count() === 500)
+    // an upsert that adds keys reports the whole archive's rows, counted on
+    // the merge write
+    sink.write("db", spec, (1L to 520L).map(i => (i, s"p$i")).toDF("id", "payload"),
+      dryRun = false)
+    assert(manifest().contains("\"rows\":520"))
+    // the CSV sink's manifest counts the rows it wrote
+    new CsvSink(s"$root/csv").write("db", spec, df, dryRun = false)
+    val csvManifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/csv/db.t.csv/${Manifest.ManifestName}")), "UTF-8")
+    assert(csvManifest.contains("\"rows\":500"), s"manifest rows wrong: $csvManifest")
+    assert(csvManifest.contains("\"table\":\"t\""))
     df.unpersist()
   }
 

@@ -133,4 +133,26 @@ class VersionedPublishSpec extends AnyFunSuite {
         Seq("t" -> (1L to 2L).toDF("k"), "t" -> (1L to 2L).toDF("k")), b)
     }
   }
+
+  test("snapshot publish with two failing tables throws the first, the other " +
+      "suppressed, and commits nothing") {
+    val b = base()
+    val v1 = VersionedPublish.publishSnapshot(Seq("ok" -> (1L to 3L).toDF("k")), b)
+    def failing(msg: String) = (1L to 3L).toDF("k")
+      .withColumn("k", when(col("k") > 1L, raise_error(lit(msg))).otherwise(col("k")))
+    val e = intercept[Exception] {
+      VersionedPublish.publishSnapshot(Seq(
+        "ok" -> (1L to 5L).toDF("k"),
+        "bad1" -> failing("boom-one"),
+        "bad2" -> failing("boom-two")), b)
+    }
+    def text(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString
+    assert(text(e).contains("boom-one"), text(e))
+    // Spark may attach its own suppressed errors; the second table's must be there
+    assert(e.getSuppressed.exists(t => text(t).contains("boom-two")),
+      e.getSuppressed.map(text).mkString("\n"))
+    assert(VersionedPublish.resolveSnapshot(spark, b).map(_._1) === Some(v1))
+    assert(VersionedPublish.readSnapshotTable(spark, b, "ok").count() === 3)
+  }
 }
