@@ -378,12 +378,6 @@ object Bench {
         // stream: the st-family floor at small SF — read st timings NET
         // of this to see the actual query work
         s""""stream_null_sec":${fmt(streamNullSec)},""" +
-        // the shared memo builds vanish from steady-state per-query times
-        // (min-of-N discards the first-touch run); report them explicitly
-        // so a build regression stays diffable round over round. Covers
-        // BOTH the explicit SparkEntry memos and every PlanPersist tag
-        // (timed at its eager first materialization, r12).
-        s""""memo_build_secs":${memoBuildJson()},""" +
         s""""warmup_sec":${fmt(warmupSec)},"runs_per_query":$runs,""" +
         s""""suspect_regressions":$suspectsJson,""" +
         s""""suspects_under_load":$underLoadJson,""" +
@@ -398,8 +392,11 @@ object Bench {
     val run1Json = results.map { case (k, _) =>
       "\"" + k + "\":" + fmt(firstRuns.getOrElse(k, -1.0)) }
       .mkString("{", ",", "}")
+    // the memo fields ride only the file artifacts: inside the stdout
+    // line they used up its byte budget and left "queries" empty
     val fullJson = line(results,
-      s""","n_queries":${results.size},"queries_run1":$run1Json""")
+      s""","n_queries":${results.size},"queries_run1":$run1Json,""" +
+        memoJson)
     // a filtered dev run must never clobber the full-suite artifact of
     // record (bench_full.json is committed with the round)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
@@ -440,7 +437,7 @@ object Bench {
         s""""canary_par_sec":${fmt(canaryParSec)},""" +
         s""""canary_threads":${cpus.toInt},""" +
         s""""stream_null_sec":${fmt(streamNullSec)},""" +
-        s""""memo_build_secs":${memoBuildJson()},""" +
+        memoJson + "," +
         s""""warmup_sec":${fmt(warmupSec)},"runs_per_query":$runs,""" +
         s""""queries":${trendQueries.map { case (k, v) =>
           "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")}}"""
@@ -480,17 +477,21 @@ object Bench {
     if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** memo_build_secs JSON: the explicit SparkEntry memos plus every
-    * PlanPersist tag, each the min observed build-wall-seconds (tags are
-    * disjoint by construction: SparkEntry uses bare names, PlanPersist
-    * dotted operator paths). */
-  private def memoBuildJson(): String = {
+  /** `memo_build_secs` — every timed memo tag (the SparkEntry shared
+    * builds and each PlanPersist tag), the min observed build
+    * wall-seconds: the builds vanish from steady-state per-query times
+    * (min-of-N discards the first-touch run), so they are reported
+    * explicitly to keep a build regression diffable round over round —
+    * and `memo`, the shared store's hit/miss/build/eviction counters. */
+  private def memoJson: String = {
     val fmtLocal = (v: Double) =>
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    (SparkEntry.memoBuildSecs.toMap ++ graft.operators.PlanPersist.buildSecs)
-      .toSeq.sortBy(_._1)
+    val secs = graft.operators.Memo.buildSecs.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmtLocal(v) }
-      .mkString("{", ",", "}")
+    val counts = graft.operators.Memo.store.stats
+      .map { case (k, v) => "\"" + k + "\":" + v }
+    s""""memo_build_secs":${secs.mkString("{", ",", "}")},""" +
+      s""""memo":${counts.mkString("{", ",", "}")}"""
   }
 
   private def queriesOf(

@@ -58,26 +58,15 @@ object Calibration {
     * session, and without the memo each re-pays the full tokenize scan
     * and the whole GD chain. Keyed by session identity + source-plan
     * semantic hash + params so a stopped test session can never poison
-    * a later one; frames persist MEMORY_AND_DISK and die with their
-    * session. */
-  // bounded by the shared LruFrameCache: the centered base is
-  // CORPUS-SIZED, so an unbounded memo would leak full-corpus caches in
-  // a long-lived session training over many distinct corpora
-  private val baseCache = new LruFrameCache(maxEntries = 8)
-  private val trainCache = new LruFrameCache(maxEntries = 8)
-
-  private def cacheKey(docs: DataFrame, params: Seq[Any]) =
-    (graft.SessionKey(docs.sparkSession),
-      docs.queryExecution.analyzed.semanticHash().toString,
-      params.mkString("|"))
-
+    * a later one; frames persist MEMORY_AND_DISK in [[Memo.store]],
+    * whose bound matters here: the centered base is CORPUS-SIZED. */
   private def centeredBaseCached(docs: DataFrame, sourceCol: String,
-      textCol: String, targetSource: String): DataFrame = synchronized {
-    baseCache.getOrElseUpdate(
-      cacheKey(docs, Seq(sourceCol, textCol, targetSource)),
+      textCol: String, targetSource: String): DataFrame =
+    Memo.frame("calib.base", docs,
+        Seq(sourceCol, textCol, targetSource).mkString("|")) {
       centeredBase(docs, sourceCol, textCol, targetSource)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Rational-sigmoid prediction in [0, 1e6) micro-units for a weight
     * state carried as (w0_u, w1_u) columns — shared trainer/audit math. */
@@ -90,13 +79,13 @@ object Calibration {
 
   def domainClassifierSteps(docs: DataFrame, sourceCol: String,
       textCol: String, targetSource: String,
-      steps: Int = 3): DataFrame = synchronized {
-    trainCache.getOrElseUpdate(
-      cacheKey(docs, Seq(sourceCol, textCol, targetSource, steps)),
+      steps: Int = 3): DataFrame =
+    Memo.frame("calib.train", docs,
+        Seq(sourceCol, textCol, targetSource, steps).mkString("|")) {
       domainClassifierStepsUncached(docs, sourceCol, textCol,
           targetSource, steps)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   private def domainClassifierStepsUncached(docs: DataFrame,
       sourceCol: String, textCol: String, targetSource: String,

@@ -152,24 +152,15 @@ object EntityResolution {
     * Memoized per (session, source plan, params) and persisted
     * MEMORY_AND_DISK: the bench/verify harness runs er2, er3 and er6 as
     * separate actions in one session, and without the memo each would
-    * re-score the full candidate set. Cache lifetime: one candidate-set
-    * frame per distinct (table, params) pair — pair-count-bounded, small
-    * relative to the corpus; entries die with their session (keyed by
-    * session identity so a stopped test session can never poison the
-    * next). */
-  /** Memo frames bounded by the shared [[LruFrameCache]] (8 entries —
-    * comfortably above the 1-2 distinct configs per cache a bench/verify
-    * session uses); an evicted frame recomputes on next use. */
-  private val scoredCache = new LruFrameCache(maxEntries = 8)
-
+    * re-score the full candidate set. Cache lifetime: one [[Memo.store]]
+    * entry per distinct (table, params) pair — pair-count-bounded, small
+    * relative to the corpus; keyed by session identity so a stopped test
+    * session can never poison the next. */
   private def scoredDistinct(records: DataFrame, keyCol: String,
       nameCol: String, blockCol: String, sizeCol: String, catCol: String,
       priceCol: String, sizeTol: Int, priceTol: Double): DataFrame = {
-      val key = (graft.SessionKey(records.sparkSession),
-        records.queryExecution.analyzed.semanticHash().toString,
-        Seq(keyCol, nameCol, blockCol, sizeCol, catCol, priceCol, sizeTol,
-          priceTol).mkString("|"))
-      scoredCache.getOrElseUpdate(key, {
+      Memo.frame("er.scored", records, Seq(keyCol, nameCol, blockCol,
+          sizeCol, catCol, priceCol, sizeTol, priceTol).mkString("|")) {
         // token -> document frequency, folded INTO the shared pass (r12):
         // er11's tf adjustment needs the df of the pair's rarest shared
         // token, and computing it separately replayed the whole blocked
@@ -194,7 +185,7 @@ object EntityResolution {
             "fs_deci")
           .agg(min(col("df")).as("min_df"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      }
     }
 
   def fellegiSunterMatches(records: DataFrame, keyCol: String,
@@ -648,17 +639,15 @@ object EntityResolution {
     * the same table still share; the assignment frame is record-sized
     * and persists MEMORY_AND_DISK (spills, never OOMs), dying with its
     * session. */
-  private val entityCache = new LruFrameCache(maxEntries = 8)
-
   def resolveEntities(records: DataFrame, keyCol: String, nameCol: String,
       blockCol: String, threshold: Double): DataFrame = {
     val proj = records.select(col(keyCol), col(nameCol), col(blockCol))
-    val key = (graft.SessionKey(records.sparkSession),
-      proj.queryExecution.optimizedPlan.semanticHash().toString,
-      Seq(keyCol, nameCol, blockCol, threshold).mkString("|"))
-    entityCache.getOrElseUpdate(key,
+    Memo.frame("er.entities", proj,
+        Seq(keyCol, nameCol, blockCol, threshold).mkString("|"),
+        optimized = true) {
       resolveEntitiesUncached(proj, keyCol, nameCol, blockCol, threshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
   }
 
   private def resolveEntitiesUncached(records: DataFrame, keyCol: String,

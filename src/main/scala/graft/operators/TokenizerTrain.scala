@@ -76,23 +76,16 @@ object TokenizerTrain {
     * The cached frame is the 1-row checkpointed wide frame (<= 16
     * merges), so the memo holds bytes, not corpus data; checkpointed
     * RDDs die with their session, and the session identity is part of
-    * the key so a stopped test session can never poison a later one. */
-  // bounded by the shared LruFrameCache: each entry is a 1-row wide frame,
-  // but its backing checkpointed RDD still occupies the session's cache
-  // registry — the bound keeps a long-lived multi-corpus session flat
-  private val trainCache = new LruFrameCache(maxEntries = 8)
-
-  /** 1-row wide frame (pair_k, cnt_k, x_k, y_k for k=1..nMerges) of the
-    * trained merge table — memoized; see [[trainCache]]. */
+    * the key so a stopped test session can never poison a later one.
+    * Entries live in [[Memo.store]], whose bound keeps a long-lived
+    * multi-corpus session flat. The value is the 1-row wide frame
+    * (pair_k, cnt_k, x_k, y_k for k=1..nMerges). */
   private def trainedMergesWide(docs: DataFrame, textCol: String,
-      nMerges: Int): DataFrame = synchronized {
-    val proj = docs.select(col(textCol))
-    val key = (graft.SessionKey(docs.sparkSession),
-      proj.queryExecution.optimizedPlan.semanticHash().toString,
-      s"$textCol|$nMerges")
-    trainCache.getOrElseUpdate(key,
-      trainWideUncached(docs, textCol, nMerges))
-  }
+      nMerges: Int): DataFrame =
+    Memo.frame("tok.mergesWide", docs.select(col(textCol)),
+        s"$textCol|$nMerges", optimized = true) {
+      trainWideUncached(docs, textCol, nMerges)
+    }
 
   def bpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     val wide = trainedMergesWide(docs, textCol, nMerges)

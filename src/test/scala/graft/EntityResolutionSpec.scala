@@ -467,7 +467,8 @@ class EntityResolutionSpec extends AnyFunSuite {
   }
 
   test("scored-candidate memo is LRU-bounded: a long-lived session " +
-      "scoring many distinct configs never holds more than 8 frames") {
+      "scoring many distinct configs keeps no frame past the shared " +
+      "store's bound") {
     import spark.implicits._
     val recs = Seq(
       (1L, "alpha widget", "B1", 5, "T", 10.0),
@@ -476,14 +477,19 @@ class EntityResolutionSpec extends AnyFunSuite {
       (4L, "gamma thing", "B2", 7, "U", 44.0)
     ).toDF("k", "name", "block", "size", "cat", "price")
     val base = spark.sparkContext.getPersistentRDDs.size
-    // 12 distinct param keys -> 12 memo builds; the LRU must have
-    // unpersisted the 4 least recently used along the way
+    // 12 distinct param keys -> 12 memo builds, then as many newer
+    // entries as the store holds: the LRU must have released every one
     for (tol <- 1 to 12) {
       EntityResolution.fellegiSunterMatches(recs, "k", "name", "block",
         "size", "cat", "price", sizeTol = tol, priceTol = 50.0).count()
     }
+    assert(spark.sparkContext.getPersistentRDDs.size > base,
+      "the scored frames are persisted while their entries live")
+    for (i <- 1 to graft.operators.Memo.MaxEntries)
+      graft.operators.Memo.store.memo[String](("s", "newer", i.toString),
+        Map.empty, _ => ())("v")
     val grown = spark.sparkContext.getPersistentRDDs.size - base
-    assert(grown <= 8,
+    assert(grown <= 0,
       s"memo must evict beyond its LRU bound; registry grew by $grown")
   }
 }
