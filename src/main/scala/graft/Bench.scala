@@ -477,7 +477,7 @@ object Bench {
     if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** `memo_build_secs` — every timed memo tag (the SparkEntry shared
+  /** `memo_build_secs` — every timed memo tag (the query kit's shared
     * builds and each PlanPersist tag), the min observed build
     * wall-seconds: the builds vanish from steady-state per-query times
     * (min-of-N discards the first-touch run), so they are reported

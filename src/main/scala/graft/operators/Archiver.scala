@@ -178,17 +178,23 @@ final class Archiver(
     recoverLiveStore()
     val present = Catalog.discoverTables(conf.source.dir,
       spark.sparkContext.hadoopConfiguration).toSet
-    val candidates = Tables.specs.filter(s => present.contains(s.name))
+    // one schema probe per present table: it resolves the soft-delete
+    // column and stands in for electTables' own per-candidate column gate
+    val fieldsOf = Tables.specs.filter(s => present.contains(s.name))
+      .map(s => s.name -> Tables.load(spark, conf.source.dir, s.name)
+        .schema.fieldNames.toSet).toMap
+    val candidates = Tables.specs.filter(s => fieldsOf.contains(s.name))
       .map(s => s.copy(deletedColumn =
         // the configured soft-delete column applies only where it exists
-        if (Tables.load(spark, conf.source.dir, s.name)
-          .schema.fieldNames.contains(conf.source.deletedColumn))
+        if (fieldsOf(s.name).contains(conf.source.deletedColumn))
           Some(conf.source.deletedColumn)
         else s.deletedColumn))
     val elected = Catalog.electTables(
       spark, conf.source.dir, candidates,
       include = conf.source.tables,
-      excludeRegexes = conf.source.excludedTables)
+      excludeRegexes = conf.source.excludedTables,
+      deletedColumnRequired = false)
+      .filter(s => s.deletedColumn.exists(fieldsOf(s.name).contains))
     if (parallelism <= 1) return elected.map(runTable(_, liveStore))
 
     // FK waves over the ACYCLIC elected set: wave(t) = 1 + max(wave(elected

@@ -19,7 +19,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * UUID, never `identityHashCode` (a GC'd session's address can be
   * reused and would serve a dead session's value to a new one). The
   * identity is the input plan hash plus params ([[Memo.frame]]), or the
-  * sf dir for SparkEntry's dir-keyed values.
+  * sf dir for the query kit's dir-keyed values ([[graft.queries.QueryKit]]).
   *
   * STAMP: the mtimes of the files an entry was built from. A request
   * with a different stamp replaces the entry, releasing the old value
