@@ -18,7 +18,7 @@ object ExplainDump {
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(outDir)
-    val spark = Main.localSession(Main.cpus(32), logLevel = "ERROR")
+    val spark = Main.localSession(Main.cpus(), logLevel = "ERROR")
     graft.functions.GraftExtensions.register(spark)
     names.foreach { name =>
       val out = outDir.resolve(s"${name}_$suffix.txt")

@@ -40,7 +40,7 @@ object Main {
 
   /** The settings every local session shares: `shuffle.partitions` =
     * `cpus`, AQE on or off, UTC, no UI. */
-  private def builder(master: String, cpus: String, aqe: Boolean): SparkSession.Builder =
+  private[graft] def builder(master: String, cpus: String, aqe: Boolean): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -53,12 +53,13 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  /** Local parallelism: SPARK_GRAFT_CPUS, else `default`. */
-  private[graft] def cpus(default: Int): String =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString)
+  /** Local parallelism: SPARK_GRAFT_CPUS, else the host's processor count. */
+  private[graft] def cpus(): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
 
   def session(): SparkSession = {
-    val n = cpus(4)
+    val n = cpus()
     builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$n]"), n, aqe = true)
       .appName("graft-archiver")
       .getOrCreate()

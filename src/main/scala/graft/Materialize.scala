@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, ArrayType, MapType, StructType}
 
 /** The timed action for benchmarks and scale probes: a full-column
-  * fingerprint, not `count()`.
+  * fingerprint, not `count()`. Also the column warm-up and cache flush
+  * those harnesses run around it.
   *
   * `count()` is the wrong materializer for timing a query: Catalyst
   * column-prunes everything the action does not reference, so a query
@@ -55,4 +56,41 @@ object Materialize {
     * mix IS the query's). */
   def fingerprintFrame(df: DataFrame): DataFrame =
     df.agg(bit_xor(xxhash64(struct(hashableCols(df): _*))).as("fp"))
+
+  /** Read every column of every fixture table under `dir` once, so the
+    * first timed query is not charged for cold column pages, codegen or
+    * shuffle set-up. `count()` alone is answered from parquet footers and
+    * leaves every column page cold, so this aggregates a per-column count.
+    * A missing or unreadable table is skipped. */
+  def warmColumns(spark: SparkSession, dir: String): Unit =
+    Tables.names.foreach { t =>
+      try {
+        val df = Tables.load(spark, dir, t)
+        df.agg(df.columns.map(c => count(col(c))).reduce(_ + _)).collect()
+      } catch { case _: Throwable => () }
+    }
+
+  /** Drop every memo frame, cached table and persisted RDD, memo store
+    * first: the blanket unpersist destroys its frames' checkpoint blocks,
+    * and a later memo hit on a dead frame would throw
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. */
+  def flushCaches(spark: SparkSession): Unit = {
+    graft.operators.LruFrameCache.clearAll()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  }
+}
+
+/** Join strategies in a rendered physical plan: broadcast-hash, sort-merge,
+  * shuffled-hash, and nested-loop plus cartesian joins. */
+final case class JoinMix(bhj: Int, smj: Int, shj: Int, loops: Int) {
+  override def toString = s"BHJ=$bhj SMJ=$smj SHJ=$shj loop=$loops"
+}
+
+object JoinMix {
+  def of(plan: String): JoinMix = {
+    def c(op: String) = op.r.findAllIn(plan).length
+    JoinMix(c("BroadcastHashJoin"), c("SortMergeJoin"), c("ShuffledHashJoin"),
+      c("BroadcastNestedLoopJoin") + c("CartesianProduct"))
+  }
 }

@@ -63,7 +63,7 @@ object PlanAudit {
     val baseDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
     // static plans: AQE wrappers hide codegen stage markers (and final
     // join choices) until execution; the audit reads the compile-time plan
-    val spark = Main.localSession(Main.cpus(8), aqe = false, logLevel = "ERROR")
+    val spark = Main.localSession(Main.cpus(), aqe = false, logLevel = "ERROR")
     graft.functions.GraftExtensions.register(spark)
     // queries that EXECUTE during construction (streaming memory sinks):
     // their returned plan is a materialized-table scan, so plan columns
@@ -166,22 +166,15 @@ object PlanAudit {
       "q100_survival_km" -> "1-row observation-end broadcast cross; KM fold + join back are duration-domain-sized",
       "q108_mase_backtest" -> "1-row series-length broadcast cross (holdout split); everything past the monthly agg is calendar-sized",
       "q101_competing_risks" -> "1-row observation-end broadcast cross; AJ fold + join back are duration-domain-sized")
-    case class Shape(xchg: Int, bhj: Int, smj: Int, shj: Int, loops: Int,
-        wscg: Int, pushed: Boolean, splices: Seq[String]) {
-      def joinMix: (Int, Int, Int, Int) = (bhj, smj, shj, loops)
-      def mixStr = s"BHJ=$bhj SMJ=$smj SHJ=$shj loop=$loops"
-    }
+    case class Shape(xchg: Int, mix: JoinMix, wscg: Int, pushed: Boolean,
+        splices: Seq[String])
     def shapeAt(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): Shape = {
       val df = fn(spark, dir)
       val p = df.queryExecution.executedPlan.toString
-      def c(pat: String) = pat.r.findAllIn(p).length
       Shape(
-        c("Exchange hashpartitioning"),
-        c("BroadcastHashJoin"),
-        c("SortMergeJoin"),
-        c("ShuffledHashJoin"),
-        c("BroadcastNestedLoopJoin") + c("CartesianProduct"),
+        "Exchange hashpartitioning".r.findAllIn(p).length,
+        JoinMix.of(p),
         // codegen stages appear as "*(n)" operator prefixes in toString
         "\\*\\((\\d+)\\)".r.findAllMatchIn(p).map(_.group(1)).toSet.size,
         p.linesIterator.exists(l =>
@@ -217,7 +210,7 @@ object PlanAudit {
       else try {
         val s1 = shapeAt(fn, sfDir)
         val note =
-          if (s1.loops > 0)
+          if (s1.mix.loops > 0)
             benignLoops.getOrElse(name, "UNEXPECTED loop join — investigate")
           else ""
         val splice =
@@ -229,17 +222,17 @@ object PlanAudit {
         // missing baseline shape simply skips the flip comparison
         val flip = try {
           val s0 = shapeAt(fn, baseDir)
-          if (s0.joinMix != s1.joinMix) {
+          if (s0.mix != s1.mix) {
             flips += 1
-            s"flip vs $baseDir: ${s0.mixStr} -> ${s1.mixStr} (" +
+            s"flip vs $baseDir: ${s0.mix} -> ${s1.mix} (" +
               reviewedFlips.getOrElse(name, "UNREVIEWED — investigate") + ")"
           } else ""
         } catch { case _: Throwable => "baseline plan ERROR" }
         val cells = Seq(if (s1.pushed) "pushdown=yes" else "", note, splice,
             flip)
           .filter(_.nonEmpty).mkString("; ")
-        s"| $name | ${s1.xchg} | ${s1.bhj} | ${s1.smj} | ${s1.shj} " +
-          s"| ${s1.loops} | ${s1.wscg} | $cells |"
+        s"| $name | ${s1.xchg} | ${s1.mix.bhj} | ${s1.mix.smj} | ${s1.mix.shj} " +
+          s"| ${s1.mix.loops} | ${s1.wscg} | $cells |"
       } catch {
         case e: Throwable => s"| $name | — | — | — | — | — | — | ERROR ${e.getClass.getSimpleName} |"
       }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * never touched), then runs the most expensive bench queries at both
   * SFs and reports per-query wall ratios plus a join-mix flip check.
   * A near-linear operator lands at <= ~12x for 10x input on a fixed
-  * 32-thread local session (10x work + shuffle/spill superlinearities
+  * thread-count local session (10x work + shuffle/spill superlinearities
   * budget); anything above that needs a written diagnosis or a fix.
   *
   * Replication discipline — growth must not CHANGE the problem:
@@ -92,7 +92,7 @@ object ScaleProbe {
     val out = if (args.length > 2) args(2) else "SCALE_PROBE.md"
     val benchFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE",
       "bench_full.json")
-    val cpus = Main.cpus(32)
+    val cpus = Main.cpus()
     val spark = Main.localSession(cpus)
     graft.functions.GraftExtensions.register(spark)
 
@@ -110,18 +110,8 @@ object ScaleProbe {
     val loadStart = loadAvg()
 
     // warm both datasets' column pages so neither side pays cold reads
-    for (dir <- Seq(src, dst); t <- Tables.names) {
-      try {
-        val df = Tables.load(spark, dir, t)
-        df.agg(df.columns.map(c => count(col(c))).reduce(_ + _)).collect()
-      } catch { case _: Throwable => () }
-    }
+    Seq(src, dst).foreach(Materialize.warmColumns(spark, _))
 
-    def flush(): Unit = {
-      graft.operators.LruFrameCache.clearAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
     /** Streaming results and iterative folds return re-rooted frames (a
       * checkpoint/memory-sink scan) — their plan describes the leaf, so
       * the join-mix comparison is n/a for them. */
@@ -135,13 +125,8 @@ object ScaleProbe {
         })
     /** AQE renders "isFinalPlan=true <final>... == Initial Plan == ..."
       * after execution; only the final section's join mix counts. */
-    def finalMix(planStr: String): String = {
-      val p = planStr.split("== Initial Plan ==").head
-      def c(pat: String) = pat.r.findAllIn(p).length
-      s"BHJ=${c("BroadcastHashJoin")} SMJ=${c("SortMergeJoin")} " +
-        s"SHJ=${c("ShuffledHashJoin")} " +
-        s"loop=${c("BroadcastNestedLoopJoin") + c("CartesianProduct")}"
-    }
+    def finalMix(planStr: String): String =
+      JoinMix.of(planStr.split("== Initial Plan ==").head).toString
     /** Fingerprint-timed min-of-2 with the executed (AQE-final) join mix
       * of the steady-state run. The fingerprint wrapper adds one
       * aggregate and no joins, so its executed plan's join mix IS the
@@ -168,9 +153,9 @@ object ScaleProbe {
       }
       // min-of-2 (first run pays memo builds / codegen, same discipline
       // as the bench); isolation: every (query, dir) starts cold
-      flush()
+      Materialize.flushCaches(spark)
       val r1 = once(); val r2 = once()
-      flush()
+      Materialize.flushCaches(spark)
       (math.min(r1._1, r2._1), r2._2)
     }
 
@@ -255,7 +240,7 @@ object ScaleProbe {
          |
          |## Partitions-scaled re-probe (worst ${scaled.size} ratios)
          |
-         |The 32-thread session pins `spark.sql.shuffle.partitions` at
+         |The $cpus-thread session pins `spark.sql.shuffle.partitions` at
          |$cpus for both SFs, so per-partition sort/hash state grows 10x
          |at sf1 — a superlinearity a real cluster removes by scaling the
          |partition count with input. Re-running the worst-ratio queries
@@ -263,7 +248,7 @@ object ScaleProbe {
          |diagnosis directly — as ATTRIBUTION, not pass/fail:
          |`yes` = the ratio dropped >=25%, the fixed knob really was the
          |residual term; `no` = it did not drop, which on thread-capped
-         |local[32] (extra partitions add task overhead, never
+         |local[$cpus] (extra partitions add task overhead, never
          |parallelism) REFUTES the knob diagnosis for that query — its
          |residual is per-stage/task overhead across iterations, a term
          |a real cluster's scheduler amortizes differently. The defect

@@ -92,7 +92,4 @@ object Tables {
       case _ => df
     }
   }
-
-  /** Pre-NTZ name kept for source compatibility. */
-  def normalizeNanos(df: DataFrame): DataFrame = normalizeTs(df)
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Main.localSession(Main.cpus(4))
+    val spark = Main.localSession(Main.cpus())
     graft.functions.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]

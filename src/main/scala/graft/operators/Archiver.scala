@@ -162,20 +162,11 @@ final class Archiver(
       }
   }
 
-  /** Full run: discover (S1/S2), elect tables (T1–T5), FK order them (T6),
-    * archive each.
-    *
-    * `parallelism > 1` runs tables concurrently in FK "waves": a table
-    * joins a wave only when every elected child table is already done, so
-    * delete-back still never orphans child rows, but independent tables
-    * (the common case — most tables share no FK path) submit their Spark
-    * jobs simultaneously instead of serializing driver-side. Each wave is
-    * a barrier; within it, results arrive in deterministic table order.
-    */
-  def run(
-      liveStore: Option[(TableSpec, DataFrame) => Unit] = None,
-      parallelism: Int = 1): Seq[TableResult] = {
-    recoverLiveStore()
+  /** Discover (S1/S2), elect (T1–T5) and FK-order (T6) the tables a run
+    * archives, in the order a sequential run archives them. It does not
+    * finish interrupted delete-back swaps, so a table stranded at its
+    * backup is not seen; `run` recovers those first. */
+  def elect(): Seq[TableSpec] = {
     val present = Catalog.discoverTables(conf.source.dir,
       spark.sparkContext.hadoopConfiguration).toSet
     // one schema probe per present table: it resolves the soft-delete
@@ -189,12 +180,28 @@ final class Archiver(
         if (fieldsOf(s.name).contains(conf.source.deletedColumn))
           Some(conf.source.deletedColumn)
         else s.deletedColumn))
-    val elected = Catalog.electTables(
+    Catalog.electTables(
       spark, conf.source.dir, candidates,
       include = conf.source.tables,
       excludeRegexes = conf.source.excludedTables,
       deletedColumnRequired = false)
       .filter(s => s.deletedColumn.exists(fieldsOf(s.name).contains))
+  }
+
+  /** Full run: finish interrupted swaps, [[elect]] the tables, archive each.
+    *
+    * `parallelism > 1` runs tables concurrently in FK "waves": a table
+    * joins a wave only when every elected child table is already done, so
+    * delete-back still never orphans child rows, but independent tables
+    * (the common case — most tables share no FK path) submit their Spark
+    * jobs simultaneously instead of serializing driver-side. Each wave is
+    * a barrier; within it, results arrive in deterministic table order.
+    */
+  def run(
+      liveStore: Option[(TableSpec, DataFrame) => Unit] = None,
+      parallelism: Int = 1): Seq[TableResult] = {
+    recoverLiveStore()
+    val elected = elect()
     if (parallelism <= 1) return elected.map(runTable(_, liveStore))
 
     // FK waves over the ACYCLIC elected set: wave(t) = 1 + max(wave(elected

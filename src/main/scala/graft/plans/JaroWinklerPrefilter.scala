@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{DoubleType, NumericType}
   * rounding — the conjunct must only ever be IMPLIED by the original.
   *
   * Honest expectation: the win is bounded (~10-15% measured on
-  * document-scale candidates, `jw_rule_*` in the bench) because the
+  * document-scale candidates, rule off vs on) because the
   * pruned pairs are the CHEAP ones — the scorer's cost is min*window,
   * which is small exactly when the length ratio fails. The rule stays on
   * because the conjunct is free, the saving is real at candidate-join

@@ -38,7 +38,7 @@ object EventsStreaming {
     val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
     val bounded = if (maxFilesPerTrigger == Int.MaxValue) reader
       else reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    graft.Tables.normalizeNanos(bounded.parquet(dir))
+    graft.Tables.normalizeTs(bounded.parquet(dir))
   }
 
   /** The shared aggregation: tumbling 1-hour window per event_type. */
@@ -78,7 +78,7 @@ object EventsStreaming {
     // file stream sources need a directory; point at the parent dir with a
     // glob filter so a bare single-file fixture also streams
     val (dir, glob) = splitDirGlob(parquetPath)
-    val stream = graft.Tables.normalizeNanos(
+    val stream = graft.Tables.normalizeTs(
       spark.readStream.schema(schema).option("pathGlobFilter", glob).parquet(dir))
     hourlyAgg(stream.withWatermark("ts", "1 hour"))
       .writeStream
@@ -100,7 +100,7 @@ object EventsStreaming {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema: StructType = spark.read.parquet(parquetPath).schema
     val (dir, glob) = splitDirGlob(parquetPath)
-    val stream = graft.Tables.normalizeNanos(
+    val stream = graft.Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", glob)
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -124,7 +124,7 @@ object EventsStreaming {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema: StructType = spark.read.parquet(parquetPath).schema
     val (dir, glob) = splitDirGlob(parquetPath)
-    def side(name: String) = graft.Tables.normalizeNanos(
+    def side(name: String) = graft.Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", glob)
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -193,7 +193,7 @@ object EventsStreaming {
       spark: SparkSession, parquetPath: String,
       queryName: String): StreamingQuery = {
     val stream = fileStream(spark, parquetPath)
-    val static = graft.Tables.normalizeNanos(
+    val static = graft.Tables.normalizeTs(
       spark.read.schema(spark.read.parquet(parquetPath).schema)
         .parquet(parquetPath))
     tierAgg(stream.withWatermark("ts", "1 hour"), userTierDim(static))
@@ -271,7 +271,7 @@ object EventsStreaming {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema: StructType = spark.read.parquet(parquetPath).schema
     val (dir, glob) = splitDirGlob(parquetPath)
-    val stream = graft.Tables.normalizeNanos(
+    val stream = graft.Tables.normalizeTs(
       spark.readStream.schema(schema).option("pathGlobFilter", glob).parquet(dir))
     hourlyAgg(stream.withWatermark("ts", "1 hour"))
       .writeStream

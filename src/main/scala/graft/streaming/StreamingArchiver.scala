@@ -46,7 +46,7 @@ object StreamingArchiver {
       if (f.isFile) (f.getParent, f.getName) else (path, "*")
     }
     val schema = spark.read.parquet(path).schema
-    val stream = Tables.normalizeNanos(
+    val stream = Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", glob)
         .option("maxFilesPerTrigger", maxFilesPerTrigger)

@@ -5,20 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Main.builder("local[4]", "4", aqe = true)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      // cached plans keep AQE-coalesced partitioning: without this every
-      // persisted small intermediate materializes at the static shuffle
-      // partition count and each downstream stage pays one task per
-      // near-empty block (measured 2.5x on the pagerank iteration chain)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

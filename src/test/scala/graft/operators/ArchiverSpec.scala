@@ -88,6 +88,8 @@ class ArchiverSpec extends AnyFunSuite {
     // child (lineitem) before parent (orders)
     val names = results.map(_.table)
     assert(names.indexOf("lineitem") < names.indexOf("orders"))
+    // the public election step names the same tables in the same order
+    assert(a.elect().map(_.name) === names)
   }
 
   test("delete-only mode (archive_data=false) deletes without sinks (D2)") {
